@@ -33,6 +33,13 @@ ROOT = os.path.dirname(HERE)
 SETUPS = 3
 DRIVER_MEM = "2g"  # heap cap of the driver JVM (local mode runs tasks in it)
 SESSION_CONF = {"spark.ui.showConsoleProgress": "false"}
+# session settings that shape a run's plans and task counts; recorded in
+# each result, and compare.py refuses results where they differ
+PINNED_CONF = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+    "spark.sql.files.openCostInBytes",
+)
 
 WORKLOADS = ("llm_sf01", "lake_ingest")
 E2E = ("setup_s", "wall_s", "heap_retained_mb")
@@ -57,8 +64,12 @@ def _isolate(work: str, cpus: int) -> None:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     )
+    # the session's sizing comes from SPARK_GRAFT_* variables: drop any
+    # inherited ones, so every run uses the engine's defaults plus these two
+    for k in [k for k in os.environ if k.startswith("SPARK_GRAFT_")]:
+        del os.environ[k]
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", DRIVER_MEM)
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     tempfile.tempdir = None
     if ROOT not in sys.path:
         sys.path.insert(0, ROOT)
@@ -99,7 +110,7 @@ def run(args, work: str) -> tuple[dict, dict]:
 
     from ecommerce_lakehouse_spark.session import get_spark
     from lakebench import workloads as wl
-    from lakebench.trace import RssSampler, host_cpu, tree_cpu_s
+    from lakebench.trace import RssSampler, host_cpu, host_probe_s, tree_cpu_s
 
     e2e_units, layer_units = declared_metrics()
     cpus = len(os.sched_getaffinity(0))
@@ -139,6 +150,7 @@ def run(args, work: str) -> tuple[dict, dict]:
             p.groups = wl.JobGroups(spark)
 
         walls, per_pass = [], []
+        probe0 = host_probe_s()
         steal0, cpu0, tree0 = *host_cpu(), tree_cpu_s(jvm_pid)
         c0 = time.perf_counter()
         while sum(walls) < args.seconds or not walls:
@@ -150,6 +162,7 @@ def run(args, work: str) -> tuple[dict, dict]:
 
     c1 = time.perf_counter()
     steal1, cpu1 = host_cpu()
+    probe1 = host_probe_s()
     tree_s = tree_cpu_s(jvm_pid) - tree0
     heap_mb = _retained_heap_mb(spark)
     extra = w.check(p) or {}
@@ -185,6 +198,7 @@ def run(args, work: str) -> tuple[dict, dict]:
         "master": spark.sparkContext.master,
         "spark_version": spark.version,
         "driver_memory": spark.conf.get("spark.driver.memory", None),
+        "session_conf": {k: spark.conf.get(k, None) for k in PINNED_CONF},
         "scale": scale,
         "input_digest": w.digest,
         "source_digest": _source_digest(),
@@ -192,6 +206,7 @@ def run(args, work: str) -> tuple[dict, dict]:
         "python": sys.version.split()[0],
         "phases_s": phases,
         "host_steal_share": (steal1 - steal0) / max(1, cpu1 - cpu0),
+        "host_probe_s": (probe0 + probe1) / 2,
         "passes": len(walls),
         "pass_walls_s": walls,
         "failures": p.failures,
@@ -208,20 +223,22 @@ def _retained_heap_mb(spark) -> float:
     """Driver heap in use after full collections: what the session keeps
     alive (plans, cached blocks, status data), independent of when the
     collector last ran.  Spark's context cleaner frees broadcasts and
-    cached blocks asynchronously once their references are collected, so
-    collect until the figure stops falling."""
+    cached blocks asynchronously once their references are collected, and
+    a round can catch it half done, so collect until the figure has not
+    fallen for three rounds in a row."""
     jvm = spark.sparkContext._jvm
     rt = jvm.java.lang.Runtime.getRuntime()
-    best = float("inf")
-    for _ in range(10):
+    best, flat = float("inf"), 0
+    for _ in range(20):
         gc.collect()  # Python-side garbage still pins JVM objects through py4j
         jvm.java.lang.System.gc()
         time.sleep(0.2)
         used = (rt.totalMemory() - rt.freeMemory()) / 2**20
-        if used > best - 0.5:
+        flat = flat + 1 if used > best - 0.5 else 0
+        best = min(best, used)
+        if flat == 3:
             break
-        best = used
-    return min(best, used)
+    return best
 
 
 def emit(values: dict[str, float], units: dict[str, str]) -> dict:

@@ -1,10 +1,12 @@
 """Tests of the benchmark itself: seeded inputs, the correctness checker and
 the metric declarations.
 
-    python3 -m pytest lakebench -q
+    python3 -m pytest lakebench -q            # fast tests
+    python3 -m pytest lakebench -q -m slow    # Spark-backed tests
 
 The Spark-backed tests (counter cross-checks and a short traced run) start
-a JVM and take about two minutes; they run when ``LAKEBENCH_SPARK_TESTS=1``.
+a JVM and take about two minutes; they carry the repository's ``slow``
+marker, which the default run deselects.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ import os
 import re
 import subprocess
 import sys
+from unittest import mock
 
 import pandas as pd
 import pytest
@@ -21,12 +24,9 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from lakebench import check, inputs, run  # noqa: E402
+from lakebench import check, compare, inputs, run, workloads  # noqa: E402
 
 NAME = re.compile(r"^[A-Za-z0-9_.-]+$")
-spark_tests = pytest.mark.skipif(
-    os.environ.get("LAKEBENCH_SPARK_TESTS") != "1", reason="set LAKEBENCH_SPARK_TESTS=1"
-)
 
 
 def test_same_seed_same_digest_other_seed_other_digest():
@@ -91,7 +91,51 @@ def test_emit_rejects_undeclared_and_fills_missing():
         run.emit({"a.b_s": 1.0, "undeclared": 2.0}, units)
 
 
-@spark_tests
+def test_lake_pass_counts_a_raising_engine_call_and_goes_on(tmp_path, monkeypatch):
+    """A failing medallion run and a failing merge are each one named failed
+    operation; the table's later steps are skipped, and the pass and its
+    check still return."""
+
+    class MergeFails:
+        def __init__(self, spark, root):
+            self.root = root
+
+        def overwrite(self, df, partition_by):
+            return 0
+
+        def merge(self, src, keys):
+            raise RuntimeError("injected merge failure")
+
+    def medallion_fails(*args):
+        raise RuntimeError("injected medallion failure")
+
+    monkeypatch.setattr(workloads, "LakeTable", MergeFails)
+    monkeypatch.setattr(workloads, "run_medallion", medallion_fails)
+    p = workloads.Pass(mock.MagicMock(), str(tmp_path), seed=1, traced=False)
+    w = workloads.LakeWorkload()
+    w.data_dir = w.batch_dir = str(tmp_path)
+    layer = w.run_pass(p, str(tmp_path))
+    assert w.check(p) == {}
+    assert p.attempted == 2
+    assert [f.split(":")[0] for f in p.failures] == ["pipelines.medallion", "lake.merge"]
+    assert "injected merge failure" in p.failures[1]
+    assert layer["lake.commits"] == 0 and layer["lake.commit_p80_ms"] == 0.0
+
+
+def test_compare_refuses_results_with_another_heap_or_cpu_count():
+    def result(**prov):
+        base = {"workload": "w", "trace": 0, "cpus": 4, "spark_version": "4.1.2",
+                "driver_memory": "2g", "session_conf": {"spark.sql.shuffle.partitions": "32"}}
+        return {"provenance": {**base, **prov}, "metrics": {"wall_s": {"value": 1.0, "unit": "s"}}}
+
+    assert compare.compare([result()], [result()])
+    for other in ({"cpus": 8}, {"driver_memory": "8g"},
+                  {"session_conf": {"spark.sql.shuffle.partitions": "200"}}):
+        with pytest.raises(SystemExit):
+            compare.compare([result()], [result(**other)])
+
+
+@pytest.mark.slow
 def test_job_group_counters_match_independent_sources(tmp_path):
     from ecommerce_lakehouse_spark.session import get_spark
     from lakebench.trace import JobGroups
@@ -112,7 +156,7 @@ def test_job_group_counters_match_independent_sources(tmp_path):
     assert s["jobs"] >= 1 and s["tasks"] >= s["stages"] >= 1
 
 
-@spark_tests
+@pytest.mark.slow
 @pytest.mark.parametrize("workload", run.WORKLOADS)
 def test_traced_run_emits_every_declared_metric(workload):
     out = subprocess.run(

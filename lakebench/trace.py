@@ -9,6 +9,7 @@ around that call, read back from ``statusTracker()`` and the status store
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import threading
@@ -182,6 +183,19 @@ def host_cpu() -> tuple[int, int]:
     with open("/proc/stat") as f:
         fields = [int(x) for x in f.readline().split()[1:]]
     return fields[7], sum(fields)
+
+
+def host_probe_s(reps: int = 5) -> float:
+    """Median time to hash 32 MB on one core: fixed work that owes nothing
+    to the engine, so a host slow phase shows in it as in the benchmark's
+    own times, also when the hypervisor reports no steal."""
+    buf = bytes(32 << 20)
+    times = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        hashlib.sha256(buf).digest()
+        times.append(time.perf_counter() - t0)
+    return sorted(times)[reps // 2]
 
 
 def tree_cpu_s(root: int) -> float:

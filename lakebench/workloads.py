@@ -270,39 +270,57 @@ class LakeWorkload:
         return root
 
     def run_pass(self, p: Pass, root: str) -> dict:
+        """One pass: the medallion run, then the table's steps.  A step that
+        raises counts as one failed operation; the medallion run and the
+        table are independent, so either still runs when the other fails,
+        and the table's steps after a failed one are skipped."""
+        res: dict = {"commits": [], "merges": [], "reads": [], "read_s": [],
+                     "read_exec_s": [], "counts": [], "stream": [], "commit_jobs": [],
+                     "versions": [], "medallion": None, "complete": False}
+        layer: dict[str, float] = {}
+        try:
+            with p.tracer.span("pipelines.medallion"):
+                t0 = time.perf_counter()
+                res["medallion"] = _guard(p, "pipelines.medallion", lambda: run_medallion(
+                    p.spark, self.data_dir, os.path.join(root, "medallion")))
+                layer["pipelines.medallion_s"] = time.perf_counter() - t0
+        except _Skipped:
+            pass
+        try:
+            self._table_steps(p, root, res, layer)
+            res["complete"] = True
+        except _Skipped:
+            pass
+        layer.update(_commit_summary(res))
+        self.results.append(res)
+        return layer
+
+    def _table_steps(self, p: Pass, root: str, res: dict, layer: dict) -> None:
         spark, tr, g = p.spark, p.tracer, p.groups
         rng = np.random.default_rng(p.seed + 13)
-        res: dict = {"commits": [], "reads": [], "read_s": [], "read_exec_s": [],
-                     "counts": [], "stream": [], "commit_jobs": []}
-        layer: dict[str, float] = {}
-
-        with tr.span("pipelines.medallion"):
-            t0 = time.perf_counter()
-            med = run_medallion(spark, self.data_dir, os.path.join(root, "medallion"))
-            layer["pipelines.medallion_s"] = time.perf_counter() - t0
-        res["medallion"] = med
-
         t = LakeTable(spark, os.path.join(root, "orders"))
+        res["table"] = t
         with tr.span("lake.overwrite"):
-            v0 = t.overwrite(spark.read.parquet(os.path.join(self.batch_dir, "base.parquet")),
-                             partition_by=["o_year"])
+            v0 = _guard(p, "lake.overwrite", lambda: t.overwrite(
+                spark.read.parquet(os.path.join(self.batch_dir, "base.parquet")),
+                partition_by=["o_year"]))
         res["v0"] = v0
-        res["versions"] = []
         spool, ckpt = os.path.join(root, "spool"), os.path.join(root, "ckpt")
-        merge_s, merge_calls = 0.0, 0
 
         def commit(span: str, call):
             gid = g.start(span) if g else None
-            with tr.span(span):
-                c0 = time.perf_counter()
-                v = call()
-                dt = time.perf_counter() - c0
-            if g:
+            try:
+                with tr.span(span):
+                    c0 = time.perf_counter()
+                    v = _guard(p, span, call)
+                    dt = time.perf_counter() - c0
                 # a streaming trigger's jobs run under the query's own job
                 # group, and compaction is one job: count direct merges only
-                if span == "lake.merge":
+                if g and span == "lake.merge":
                     res["commit_jobs"].append(g.job_count(gid))
-                g.clear()
+            finally:
+                if g:
+                    g.clear()
             res["commits"].append(dt)
             return v, dt
 
@@ -310,9 +328,10 @@ class LakeWorkload:
             for kind, version in (("head", head), ("time_travel", int(rng.choice(earlier)))):
                 with tr.span("lake.read", kind=kind):
                     r0 = time.perf_counter()
-                    df = t.read() if kind == "head" else t.read(version=version)
+                    df = _guard(p, "lake.read", lambda: t.read() if kind == "head"
+                                else t.read(version=version))
                     r1 = time.perf_counter()
-                    n = df.count()
+                    n = _guard(p, "lake.read", df.count)
                     r2 = time.perf_counter()
                 res["reads"].append(r2 - r0)
                 res["read_s"].append(r1 - r0)
@@ -323,8 +342,7 @@ class LakeWorkload:
             if i % 2 == 0:
                 src = spark.read.parquet(os.path.join(self.batch_dir, f"b{i:03d}.parquet"))
                 v, dt = commit("lake.merge", lambda: t.merge(src, keys=["o_orderkey"]))
-                merge_s += dt
-                merge_calls += 1
+                res["merges"].append(dt)
             else:
                 os.replace(os.path.join(root, f"staged{i:03d}.parquet"),
                            os.path.join(spool, f"b{i:03d}.parquet"))
@@ -351,7 +369,8 @@ class LakeWorkload:
         first = head - LAKE_CDF_WINDOW + 1
         with tr.span("lake.changes"):
             c0 = time.perf_counter()
-            n_changes = t.changes(first, head, keys=["o_orderkey"]).count()
+            n_changes = _guard(p, "lake.changes",
+                               lambda: t.changes(first, head, keys=["o_orderkey"]).count())
             layer["lake.changes_s"] = time.perf_counter() - c0
         res["changes"] = (first, head, n_changes)
 
@@ -360,42 +379,25 @@ class LakeWorkload:
         files, size = _dir_bytes(t.root)
         layer["lake.files_written"] = files
         layer["lake.bytes_written"] = size
+        res["size"] = size
         with tr.span("lake.vacuum"):
             c0 = time.perf_counter()
-            t.vacuum()
+            _guard(p, "lake.vacuum", t.vacuum)
             layer["lake.vacuum_s"] = time.perf_counter() - c0
         layer["lake.read_cache_entries"] = len(t._read_cache)
 
-        commits = res["commits"]
-        tenth = max(1, len(commits) // 10)
-        layer.update({
-            "lake.commits": len(commits),
-            "lake.commit_p50_ms": 1000 * _median(commits),
-            "lake.commit_p80_ms": 1000 * float(np.percentile(commits, 80)),
-            "lake.commit_growth": _median(commits[-tenth:]) / _median(commits[:tenth]),
-            "lake.merge_s": merge_s,
-            "lake.merge_calls": merge_calls,
-            "lake.read_p50_ms": 1000 * _median(res["reads"]),
-            "lake.read_s": _median(res["read_s"]),
-            "lake.read_exec_s": _median(res["read_exec_s"]),
-            "streaming.batches": len(res["stream"]),
-            "streaming.trigger_p50_ms": _median([_dur(s, "triggerExecution") for s in res["stream"]]),
-            "streaming.addBatch_p50_ms": _median([_dur(s, "addBatch") for s in res["stream"]]),
-        })
-        if res["commit_jobs"]:
-            layer["lake.commit_jobs"] = _median(res["commit_jobs"])
-        res["table"] = t
-        res["size"] = size
-        self.results.append(res)
-        return layer
-
     def check(self, p: Pass) -> dict:
         """Check the last pass; returns the per-layer values that need extra
-        Spark work (space amplification, silver and rejected row counts)."""
+        Spark work (space amplification, silver and rejected row counts).
+        A check that raises counts as failed; the table is checked only
+        when all of its steps ran."""
         res = self.results[-1]
-        t = res["table"]
         extra: dict[str, float] = {}
-
+        if res["medallion"] is not None:
+            _check(p, "pipelines.medallion", lambda: self._check_medallion(res["medallion"], extra))
+        if not res["complete"]:
+            return extra
+        t = res["table"]
         replay = check.UpsertReplay(self.base, "o_orderkey")
         replay.record(res["v0"])
         for kind, i, v in res["versions"]:
@@ -404,42 +406,92 @@ class LakeWorkload:
             else:
                 replay.record(v)
 
-        p.attempted += 1
-        head_pdf = t.read().toPandas()
-        ok, msg = check.compare_frames(head_pdf, replay.head())
-        if not ok:
-            p.fail("lake.head", msg)
+        def head():
+            ok, msg = check.compare_frames(t.read().toPandas(), replay.head())
+            return None if ok else msg
 
+        _check(p, "lake.head", head)
         for kind in ("head", "time_travel"):
-            p.attempted += 1
             bad = [f"v{v}: read {n}, replay {replay.counts.get(v)}"
                    for k, v, n in res["counts"] if k == kind and replay.counts.get(v) != n]
-            if bad:
-                p.fail(f"lake.{kind}_counts", "; ".join(bad[:5]))
+            _check(p, f"lake.{kind}_counts", lambda: "; ".join(bad[:5]) or None)
 
-        p.attempted += 1
-        first, head, n = res["changes"]
-        want = replay.change_rows(first, head)
-        if n != want:
-            p.fail("lake.changes", f"{n} change rows, replay {want}")
+        def changes():
+            first, head, n = res["changes"]
+            want = replay.change_rows(first, head)
+            return f"{n} change rows, replay {want}" if n != want else None
 
-        p.attempted += 1
-        med = res["medallion"]
+        _check(p, "lake.changes", changes)
+
+        def space_amp():
+            fresh = os.path.join(p.work, "snapshot")
+            shutil.rmtree(fresh, ignore_errors=True)
+            t.read().write.parquet(fresh)
+            extra["lake.space_amp"] = res["size"] / _dir_bytes(fresh)[1]
+
+        _check(p, "lake.space_amp", space_amp)
+        return extra
+
+    def _check_medallion(self, med: dict, extra: dict) -> str | None:
         want = check.medallion_expected(self.data_dir)
         got = {k: med["metrics"][k]["silver_rows"] for k in want}
-        if got != want:
-            p.fail("pipelines.medallion", f"silver rows {got}, expected {want}")
         for k, v in got.items():
             extra[f"pipelines.silver_rows.{k}"] = v
         extra["quality.rejected_rows"] = sum(
             med[f"rejected.{k}"].read().count() for k in ("part", "orders", "lineitem")
         )
+        return f"silver rows {got}, expected {want}" if got != want else None
 
-        fresh = os.path.join(p.work, "snapshot")
-        shutil.rmtree(fresh, ignore_errors=True)
-        t.read().write.parquet(fresh)
-        extra["lake.space_amp"] = res["size"] / _dir_bytes(fresh)[1]
-        return extra
+
+class _Skipped(Exception):
+    """A lake step raised; it is counted as failed and the steps that
+    depend on it are skipped."""
+
+
+def _guard(p: Pass, name: str, call):
+    try:
+        return call()
+    except Exception:
+        p.attempted += 1
+        p.fail(name, traceback.format_exc(limit=3))
+        raise _Skipped(name) from None
+
+
+def _check(p: Pass, name: str, call) -> None:
+    """Run one check: ``call`` returns None when it holds, else a message;
+    a check that raises fails with its traceback."""
+    p.attempted += 1
+    try:
+        msg = call()
+    except Exception:
+        msg = traceback.format_exc(limit=3)
+    if msg:
+        p.fail(name, msg)
+
+
+def _commit_summary(res: dict) -> dict[str, float]:
+    """Commit, read and streaming figures of one pass; empty lists (a pass
+    cut short by a failed step) give 0."""
+    commits, merges = res["commits"], res["merges"]
+    out = {
+        "lake.commits": len(commits),
+        "lake.commit_p50_ms": 1000 * _median(commits),
+        "lake.commit_p80_ms": 1000 * float(np.percentile(commits, 80)) if commits else 0.0,
+        # same kind of commit at both ends: the last direct merge over the
+        # first (a streaming trigger also pays for starting its query)
+        "lake.commit_growth": merges[-1] / merges[0] if len(merges) > 1 else 0.0,
+        "lake.merge_s": sum(merges),
+        "lake.merge_calls": len(merges),
+        "lake.read_p50_ms": 1000 * _median(res["reads"]),
+        "lake.read_s": _median(res["read_s"]),
+        "lake.read_exec_s": _median(res["read_exec_s"]),
+        "streaming.batches": len(res["stream"]),
+        "streaming.trigger_p50_ms": _median([_dur(s, "triggerExecution") for s in res["stream"]]),
+        "streaming.addBatch_p50_ms": _median([_dur(s, "addBatch") for s in res["stream"]]),
+    }
+    if res["commit_jobs"]:
+        out["lake.commit_jobs"] = _median(res["commit_jobs"])
+    return out
 
 
 def _dur(progress, phase: str) -> float:
