@@ -1,34 +1,36 @@
-"""Distributed BPE tokenizer training (Sennrich et al. 2016) — the
-iterative control-plane operator behind queries/llm6.py's
-``bpe_merge_steps`` / ``bpe_encode_stats``.
+"""BPE tokenizer training (Sennrich et al. 2016) — the operator behind
+queries/llm6.py's ``bpe_merge_steps`` / ``bpe_encode_stats``.
 
-BPE's scale property: after ONE corpus-sized word-count pass, every
-merge round runs over the distinct-WORD frequency table (vocabulary-
-bounded — millions of rows at 100 TB, not trillions). The round loop is
-therefore a fixed-cost problem, not a data problem, and the
-implementation minimizes per-round Spark overhead:
+Training splits at the vocabulary:
 
-- Each round resolves its 1-row top-merge aggregate with ONE driver
-  action and collects the winner row — a control-plane collect, bounded
-  by the merge budget, the same class as a manifest read. This file
-  lives in operators/ (not queries/) for exactly that reason: the query
-  layer stays driver-materialization-free by construction
+- **Distributed word count.** The one corpus-sized pass (tokenize, count
+  distinct words, spell each word as a padded symbol sequence
+  ``" c1 c2 ... "``) runs in Spark behind one lazy barrier.
+- **In-process merge rounds.** The ``(seq, freq)`` table is pulled to
+  the driver in ONE Arrow action. It is bounded by the vocabulary
+  (distinct words: tens at sf0.01, millions at 100 TB, never the
+  corpus) — a control-plane read, which is why this file lives in
+  operators/ and the query layer stays driver-materialization-free
   (tests/test_plans.py::test_query_layer_never_materializes_to_driver).
-- Collected merges re-enter the plan as LITERAL string replaces, so the
-  word table's lineage stays FLAT (a projection stack over the one
-  checkpointed base — no per-round checkpoint jobs, no crossJoin chain,
-  no broadcast-subtree re-execution; the round-7 chained variant paid a
-  checkpoint job every 2 rounds and 2^chain re-execution inside each).
-- The merge table itself is the collected rows (32 × 4 values) —
-  exact, since they are the executed aggregates.
+  Each round then recounts the adjacent pairs of every word: O(V * L)
+  for V distinct words of L symbols, no Spark job.
+- **Oracle semantics, exactly.** Pairs are adjacent symbols weighted by
+  ``freq``; the winner is the minimum of ``(-wc, token, pair)`` (the
+  oracle's ``ORDER BY wc DESC, token, pair``); a merge is
+  ``str.replace(" l r ", " lr ")`` on the padded sequence — leftmost and
+  non-overlapping, like Spark's and DuckDB's ``replace``; rounds stop
+  early when no pair is left.
 
-History: round 5 checkpointed every round (~14 s at sf0.1), round 7
-chained pairs of rounds (~10 s); this form is round 8 (VERDICT item #3).
+The merge table is the driver-side rows; the final vocabulary is one
+lazy projection (the learned merges as literal ``replace`` calls over
+the barriered word table), so encode consumers join a distributed table.
 """
 
 from __future__ import annotations
 
-import uuid
+import functools
+from collections import Counter
+from collections.abc import Iterable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -36,49 +38,32 @@ from pyspark.sql import DataFrame, SparkSession
 from ecommerce_lakehouse_spark.operators.scale import iter_barrier
 from ecommerce_lakehouse_spark.tables import load
 
-_BPE_VOCAB_PARTS = 4  # loop-table width: tasks per merge round
-_BPE_STACK_CAP = 8  # max stacked literal replaces before a loop-session checkpoint
 
-
-def bpe_top_merge(wf: DataFrame) -> DataFrame:
-    """Most frequent adjacent symbol pair, corpus-weighted, lexicographic
-    tiebreak — one tiny aggregate over the vocabulary-bounded word table."""
-    t = F.filter(F.split("seq", " "), lambda x: x != "")
-    return (
-        wf.select("freq", t.alias("t"))
-        .filter(F.size("t") >= 2)
-        .select(
-            "freq",
-            F.explode(
-                F.expr(
-                    "zip_with(slice(t, 1, size(t)-1), slice(t, 2,"
-                    " size(t)-1), (a, b) -> struct(a AS l, b AS r))"
-                )
-            ).alias("g"),
+def bpe_merges(
+    vocab: Iterable[tuple[str, int]], steps: int
+) -> tuple[list[tuple[int, str, str, int]], list[str]]:
+    """Run up to ``steps`` sequential merge rounds over ``(seq, freq)``
+    rows. Returns the merge table as ``(step, pair, token, wc)`` rows and
+    the post-merge sequences in input order (see module docstring)."""
+    seqs, freqs = [], []
+    for seq, freq in vocab:
+        seqs.append(seq)
+        freqs.append(freq)
+    merges = []
+    for step in range(1, steps + 1):
+        wc: Counter = Counter()
+        for seq, freq in zip(seqs, freqs):
+            t = seq.split()
+            for p in zip(t, t[1:]):
+                wc[p] += freq
+        if not wc:
+            break  # pair exhaustion: the oracle's LIMIT 1 yields no row
+        (l, r), n = min(
+            wc.items(), key=lambda kv: (-kv[1], "".join(kv[0]), " ".join(kv[0]))
         )
-        .groupBy(
-            F.concat("g.l", F.lit(" "), "g.r").alias("pair"),
-            F.concat("g.l", "g.r").alias("token"),
-        )
-        .agg(F.sum("freq").cast("long").alias("wc"))
-        # scalar struct-min instead of ORDER BY wc DESC, token LIMIT 1:
-        # same winner (negated count, then token — the oracle's ordering,
-        # with pair as a final disambiguator), but a pure partial-agg
-        # single-row reduce
-        .agg(
-            F.min(
-                F.struct((-F.col("wc")).alias("nwc"), "token", "pair")
-            ).alias("b")
-        )
-        .select(
-            F.col("b.pair").alias("pair"),
-            F.col("b.token").alias("token"),
-            (-F.col("b.nwc")).cast("long").alias("wc"),
-        )
-    )
-
-
-_BPE_CACHE: dict = {}
+        merges.append((step, f"{l} {r}", l + r, n))
+        seqs = [s.replace(f" {l} {r} ", f" {l}{r} ") for s in seqs]
+    return merges, seqs
 
 
 def bpe_train(
@@ -88,14 +73,17 @@ def bpe_train(
     word table keeps the raw ``word`` column so consumers can map any
     word to its post-merge symbol sequence (the encode path).
 
-    Training is memoized per (application, sf_dir, steps): the merge
-    table and post-merge vocabulary are deterministic artifacts backed
-    by a checkpointed base frame, so a session that both trains and
-    encodes (the deployment shape: train once, ship the vocab, every
-    encode job reuses it) pays the sequential merge rounds once."""
-    key = (spark.sparkContext.applicationId, sf_dir, steps)
-    if key in _BPE_CACHE:
-        return _BPE_CACHE[key]
+    Training is memoized per (session, sf_dir, steps) in a 4-entry LRU:
+    a session that both trains and encodes (train once, ship the vocab,
+    every encode job reuses it) pays the word count and the merge
+    rounds once."""
+    return _train(spark, sf_dir, steps)
+
+
+@functools.lru_cache(maxsize=4)
+def _train(
+    spark: SparkSession, sf_dir: str, steps: int
+) -> tuple[DataFrame, DataFrame]:
     toks = load(spark, sf_dir, "documents").select(
         F.explode(
             F.filter(
@@ -118,122 +106,20 @@ def bpe_train(
                 F.lit(" "),
             ).alias("seq"),
         )
-        # shrink the vocab table to a few partitions ONCE before the
-        # loop: every group action re-reads it, and task count per round
-        # should scale with the vocabulary (tiny), not with
-        # spark.sql.shuffle.partitions. Production sizes
-        # _BPE_VOCAB_PARTS by vocab bytes / target partition bytes; the
-        # word-count groupBy itself still runs at full shuffle width
-        # (the corpus-sized stage).
-        .repartition(_BPE_VOCAB_PARTS)
-        .transform(iter_barrier)  # the ONE materialization the loop reads
+        # lazy: the collect below materializes it, and the returned
+        # vocabulary re-reads the same blocks instead of recounting
+        .transform(iter_barrier, eager=False)
     )
-    # The loop's jobs are micro-actions over a vocabulary-bounded frame:
-    # per-action fixed cost IS the runtime. Two conf knobs cut it
-    # ~35% (measured 0.24 -> 0.16 s/action at sf0.1): shuffle width
-    # sized to the loop table (32 reducer tasks for a 4-partition frame
-    # is pure scheduling waste) and AQE off (its per-shuffle re-planning
-    # costs more than it can save on a plan this small).
-    #
-    # SQLConf is session-global, so the trim runs on a PRIVATE CLONE
-    # (spark.newSession(): same SparkContext + checkpointed RDDs, own
-    # SQLConf) instead of the caller's session — ADVICE r08: the old
-    # point-in-time spark.streams.active guard could not see a
-    # concurrent batch query or a stream started after the check, which
-    # would silently plan at width 4 with AQE off. The frame crosses
-    # sessions via a global temp view (plan handoff, no data movement);
-    # the corpus-sized word-count stage above already ran at full width
-    # on the caller's session (the checkpoint is eager), and the
-    # post-loop view hands the final vocabulary back so downstream
-    # consumers plan on the caller's session again.
-    loop = spark.newSession()
-    loop.conf.set("spark.sql.shuffle.partitions", str(_BPE_VOCAB_PARTS))
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
-    # r10 (VERDICT r09 #6): no whole-stage codegen inside the loop. Each
-    # round's plan embeds fresh literals (the replace stack), so a cold
-    # JVM compiles a new generated class per round — 32 rounds of janino
-    # compile dominated the driver-cold wall (10.1 s driver-cold vs
-    # 0.66 s warm at sf0.1). Interpreted execution over the
-    # vocabulary-bounded 4-partition frame costs microseconds per round;
-    # the corpus-sized word-count stage already ran (with codegen) on
-    # the caller's session before the loop, and the final vocabulary
-    # barrier also materializes on the caller's session. Scoped to the
-    # private clone, so nothing else in the app is affected.
-    loop.conf.set("spark.sql.codegen.wholeStage", "false")
-    loop.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    # per-INVOCATION unique view names: global_temp is app-scoped and
-    # shared, so a deterministic (sf_dir, steps) name would let two
-    # concurrent first calls (the unsynchronized cache check-then-act)
-    # drop each other's handoff mid-loop
-    view = f"bpe_wf_{uuid.uuid4().hex[:12]}"
-    try:
-        wf.createOrReplaceGlobalTempView(view)
-        merges, wf_loop = _merge_loop(
-            loop, loop.table(f"global_temp.{view}"), steps
-        )
-        wf_loop.createOrReplaceGlobalTempView(view + "_out")
-        wf = spark.table(f"global_temp.{view}_out")
-        # materialize the post-merge vocabulary once for encode consumers
-        # (32 stacked map-side replaces over the checkpointed base); the
-        # barrier is EAGER, so the finally can drop the handoff views
-        # even on success (global_temp is app-scoped — leaking them
-        # would pin one pair per invocation for the app's lifetime)
-        wf = wf.transform(iter_barrier)
-    finally:
-        spark.catalog.dropGlobalTempView(view)
-        spark.catalog.dropGlobalTempView(view + "_out")
-    out = spark.createDataFrame(
-        merges, "step int, pair string, token string, wc long"
+    vocab = wf.select("seq", "freq").toArrow()
+    merges, _ = bpe_merges(
+        zip(vocab["seq"].to_pylist(), vocab["freq"].to_pylist()), steps
     )
-    _BPE_CACHE[key] = (out, wf)
-    return out, wf
-
-
-def _merge_loop(
-    spark: SparkSession, wf: DataFrame, steps: int
-) -> tuple[list[tuple], DataFrame]:
-    """The sequential merge rounds: one control-plane action per round,
-    literal replace re-entry (see module docstring). Grouping several
-    rounds into one action was measured and rejected — each grouped
-    branch embeds the prior branch's pair-agg shuffle as an unexecuted
-    subtree, so in-action re-execution grows 2^group (c=2 ~9.2 s,
-    c=4 ~14 s vs c=1's 6.8-7.8 s at sf0.1)."""
-    merges: list[tuple] = []
-    depth = 0
-    for step in range(1, steps + 1):
-        row = (
-            bpe_top_merge(wf)
-            .select(F.lit(step).cast("int").alias("step"), "pair", "token", "wc")
-            .collect()[0]
-        )
-        if row["pair"] is None:
-            # pair exhaustion: the scalar agg yields an all-NULL row
-            # (the oracle's LIMIT 1 yields none) — later rounds would
-            # all be NULL too, so stop; both engines agree
-            break
-        merges.append((row["step"], row["pair"], row["token"], int(row["wc"])))
-        # re-enter the plan as a LITERAL replace: flat lineage, no
-        # broadcast-subtree re-execution
-        wf = wf.select(
-            "word",
-            "freq",
-            F.replace(
-                F.col("seq"),
-                F.lit(f" {row['pair']} "),
-                F.lit(f" {row['token']} "),
-            ).alias("seq"),
-        )
-        # r10 (VERDICT r09 #6): cap the replace-stack depth. Round k's
-        # aggregate re-applies all k stacked replaces per row, so an
-        # uncapped stack makes the loop O(steps^2 * vocab) string work
-        # (and, with codegen, compiles a fresh per-round class whose
-        # size grows with k — the driver-cold wall). A cheap eager
-        # localCheckpoint of the 4-partition vocab frame every
-        # _BPE_STACK_CAP rounds bounds per-round eval at O(cap * vocab)
-        # for one tiny extra job per cap-window (measured: cold loop
-        # 11.7 s -> see OPTIMIZATION_r10.md).
-        depth += 1
-        if depth >= _BPE_STACK_CAP and step < steps:
-            wf = iter_barrier(wf)
-            depth = 0
-    return merges, wf
+    seq = F.col("seq")
+    for _, pair, token, _ in merges:
+        seq = F.replace(seq, F.lit(f" {pair} "), F.lit(f" {token} "))
+    return (
+        spark.createDataFrame(
+            merges, "step int, pair string, token string, wc long"
+        ),
+        wf.select("word", "freq", seq.alias("seq")),
+    )

@@ -2,9 +2,9 @@
 
 K-means state (centroids / PQ codebooks) is control-plane-sized BY
 DEFINITION — K*(dim+1) bigints, a few KB even at warehouse K — so the
-Lloyd loop runs as the BPE literal-replace pattern (operators/bpe.py):
-per round, ONE aggregate-collect job whose K-row result updates a driver
-dict, with the centroids re-entering the next round as literal arrays.
+Lloyd loop runs driver-literal: per round, ONE aggregate-collect job
+whose K-row result updates a driver dict, with the centroids re-entering
+the next round as literal arrays.
 This replaces the per-round broadcast-join + centroid-join + eager
 localCheckpoint chain, which cost ~4 driver-planned jobs per round
 (measured on semantic_cluster_dups / pq_trained_codebook_eval — see
@@ -12,9 +12,9 @@ OPTIMIZATION_r09.md round 9).
 
 The collect here is the module's point, and it is bounded by the
 codebook size (never the corpus): the same control-plane discipline as
-the BPE top-merge collect. Assignment stays fully distributed (in-row
-integer argmin, shuffle-free); the update aggregate stays map-side
-combinable ((dim+1) cells per centroid).
+the BPE vocabulary collect (operators/bpe.py). Assignment stays fully
+distributed (in-row integer argmin, shuffle-free); the update aggregate
+stays map-side combinable ((dim+1) cells per centroid).
 
 All arithmetic is exact BIGINT (squared-L2 in integer micro-units;
 rounded-mean (2*s + n) DIV (2*n), computed in Python bigints — identical

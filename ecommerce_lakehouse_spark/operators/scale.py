@@ -271,7 +271,7 @@ RELIABLE_CHECKPOINT_CONF = "spark.ecommerce_lakehouse.reliableCheckpoint"
 
 def iter_barrier(df: DataFrame, eager: bool = True) -> DataFrame:
     """Lineage-truncation barrier for ITERATIVE operators (graph rounds,
-    Lloyd iterations, BPE merges): per-round plans otherwise grow by one
+    Lloyd iterations): per-round plans otherwise grow by one
     join per iteration and broadcast re-execution compounds exponentially
     (the pagerank lesson, queries/stats.py).
 
@@ -326,8 +326,9 @@ def narrow_barrier(
     every downstream plan branch (each branch embeds the same
     checkpointed RDD, so a single action computes it once and later
     references read the cached blocks — the rfm_segments precedent) but
-    skips the separate materialization JOB and its driver sync. Use it
-    when every consumer of the frame lives inside a single action (the
-    fold-based graph queries); loops that re-plan per round keep the
-    eager default."""
+    skips the separate materialization JOB and its driver sync. Eager
+    is needed only by loops that run an action every round (the
+    per-round collects would otherwise each recompute the frame);
+    fold-based queries and fixed-budget lazy round chains (bfs/sssp)
+    use ``eager=False``."""
     return iter_barrier(df.coalesce(width), eager=eager)

@@ -993,13 +993,13 @@ def pq_trained_codebook_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the codebook is M x K x 8 bigints (KBs) — control-plane-sized
     by definition, so it lives on the driver and re-enters each round as
-    a literal array (the BPE literal-replace pattern). Assignment is
-    shuffle-free (in-row array_min against the per-subspace literal
-    codeword array); the update aggregates member rows map-side into 9
-    combiner cells per (subspace, cid) and collects the M*CW-row result;
-    each round is ONE aggregate-collect job. Training cost is R bounded
-    aggregates over the corpus — the standard distributed k-means
-    shape, M-way parallel across subspaces."""
+    a literal array (the driver-literal pattern, operators/kmeans.py).
+    Assignment is shuffle-free (in-row array_min against the
+    per-subspace literal codeword array); the update aggregates member
+    rows map-side into 9 combiner cells per (subspace, cid) and collects
+    the M*CW-row result; each round is ONE aggregate-collect job.
+    Training cost is R bounded aggregates over the corpus — the standard
+    distributed k-means shape, M-way parallel across subspaces."""
     e = load(spark, sf_dir, "embeddings")
     u = F.transform(
         F.col("embedding").cast("array<double>"),
@@ -1018,7 +1018,7 @@ def pq_trained_codebook_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Lloyd loop via operators/kmeans.py: codebook state is
     # control-plane-sized BY DEFINITION (M*CW*8 bigints, a few KB), so
-    # init + rounds run as the BPE literal-replace pattern — one
+    # init + rounds run driver-literal — one
     # aggregate-collect job per round, codebooks re-entering as literal
     # per-subspace arrays — instead of the former per-round broadcast
     # join + codebook join + three eager localCheckpoints (r09 opt —

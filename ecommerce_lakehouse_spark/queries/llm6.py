@@ -512,24 +512,21 @@ def bpe_merge_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: THE trick is that BPE never touches the corpus after the
     first pass — each iteration runs over the distinct-WORD frequency
     table (vocabulary-bounded: millions of rows at 100 TB, not
-    trillions), so the round loop is a FIXED-COST problem — run here as
-    one control-plane collect per merge with literal replace re-entry
-    (operators/bpe.py: 32 micro-actions over one checkpointed
-    4-partition vocab frame, flat lineage, no per-round checkpoint
-    jobs). Symbol sequences ride as padded strings so the merge apply
-    is a single JVM ``replace`` (left-to-right non-overlapping in both
-    engines — greedy BPE order)."""
+    trillions), so the round loop is a FIXED-COST problem — run here
+    in-process (operators/bpe.py: one distributed word count, one
+    vocabulary collect, then 32 driver-side rounds, no per-round Spark
+    job). Symbol sequences ride as padded strings so the merge apply is
+    a single ``replace`` (left-to-right non-overlapping in both engines
+    — greedy BPE order)."""
     merges, _ = _bpe_train(spark, sf_dir)
     return merges.orderBy("step")
 
 
-# The training loop itself is a control-plane operator (grouped 1-row
-# top-merge collects + literal replace re-entry) and lives in
-# operators/bpe.py; re-exported here under the historical names for the
+# Training is a control-plane operator (distributed word count, then
+# in-process merge rounds over the collected vocabulary) and lives in
+# operators/bpe.py; re-exported here under its historical name for the
 # tests and the encode/persist consumers below.
 from ecommerce_lakehouse_spark.operators.bpe import (  # noqa: E402
-    _BPE_CACHE,
-    bpe_top_merge as _bpe_top_merge,
     bpe_train as _bpe_train,
 )
 

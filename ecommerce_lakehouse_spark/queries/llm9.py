@@ -197,7 +197,7 @@ def semantic_cluster_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Lloyd loop via operators/kmeans.py: centroid state is
     # control-plane-sized BY DEFINITION (K*(_DIM+1) bigints, a few KB),
-    # so init + rounds run as the BPE literal-replace pattern — one
+    # so init + rounds run driver-literal — one
     # aggregate-collect job per round, centroids re-entering as
     # literals — instead of the former per-round broadcast crossJoin +
     # centroid join + eager localCheckpoint chain (r09 opt: that shape

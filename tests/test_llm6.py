@@ -333,7 +333,6 @@ def test_sax_series_profile_matches_python(spark, sf_dir):
     assert got == expect
 
 
-@pytest.mark.slow  # demoted r10 (VERDICT r09 #4): oracle/property coverage kept in the release gate
 def test_bpe_32_merges_fertility_improves(spark):
     """The 32-merge vocabulary must compress strictly better than the
     3-merge one (corpus-weighted chars-per-token), and the merge table

@@ -7,6 +7,9 @@ import math
 import os
 from collections import Counter
 
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
 DOC_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 LI_SCHEMA = "l_orderkey bigint, l_partkey bigint"
 
@@ -161,8 +164,10 @@ def test_sssp_prefers_cheap_two_hop_over_direct_edge(spark, tmp_path):
 
 def _bpe_py(word_freq, steps=32):
     """Reference BPE trainer mirroring the padded-string replace
-    convention (leftmost non-overlapping, like both engines' replace)
-    and the engine's 32-merge budget with early pair exhaustion."""
+    convention (leftmost non-overlapping, like both engines' replace),
+    the oracle's ``ORDER BY wc DESC, token, pair`` tie-break and the
+    engine's 32-merge budget with early pair exhaustion. Recounts every
+    pair every round — deliberately the naive form."""
     seqs = {w: " " + " ".join(w) + " " for w in word_freq}
     merges = []
     for _ in range(steps):
@@ -174,7 +179,8 @@ def _bpe_py(word_freq, steps=32):
         if not pairs:
             break
         (a, b), wc = min(
-            pairs.items(), key=lambda kv: (-kv[1], kv[0][0] + kv[0][1])
+            pairs.items(),
+            key=lambda kv: (-kv[1], kv[0][0] + kv[0][1], f"{kv[0][0]} {kv[0][1]}"),
         )
         merges.append((a + " " + b, a + b, wc))
         seqs = {
@@ -183,7 +189,97 @@ def _bpe_py(word_freq, steps=32):
     return merges, seqs
 
 
-@pytest.mark.slow  # demoted r10 (VERDICT r09 #4): oracle/property coverage kept in the release gate
+@settings(max_examples=300, deadline=None)
+@given(
+    word_freq=st.dictionaries(
+        st.text("abc", min_size=1, max_size=8),
+        st.integers(1, 4),
+        min_size=1,
+        max_size=8,
+    ),
+    steps=st.integers(0, 40),
+)
+# one symbol run (non-overlapping replace): " a a a a " -> " aa a a "
+@example(word_freq={"aaaa": 1}, steps=32)
+# "aa a" / "a aa" both make "aaa" at equal count: the pair breaks the tie
+@example(word_freq={"aaaaa": 2}, steps=32)
+# "cb c" / "c bc" both make "cbc" at equal count, from different words
+@example(word_freq={"cbcbc": 1, "acb": 3}, steps=32)
+# tied counts, different tokens
+@example(word_freq={"ab": 1, "cd": 1}, steps=32)
+# pair exhaustion long before the budget
+@example(word_freq={"ab": 2, "c": 1}, steps=32)
+def test_bpe_merges_matches_reference(word_freq, steps):
+    """The in-process merge rounds (incremental pair index) produce the
+    reference trainer's merge table and final sequences exactly."""
+    from ecommerce_lakehouse_spark.operators.bpe import bpe_merges
+
+    words = list(word_freq)
+    merges, seqs = bpe_merges(
+        [(" " + " ".join(w) + " ", word_freq[w]) for w in words], steps
+    )
+    want_merges, want_seqs = _bpe_py(word_freq, steps)
+    assert merges == [(k, *m) for k, m in enumerate(want_merges, 1)]
+    assert dict(zip(words, seqs)) == want_seqs
+
+
+def _group_jobs(sc, group, action):
+    """Run ``action`` inside job group ``group``; return its job infos."""
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    return out, [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+
+
+def test_bpe_train_launches_at_most_three_jobs(spark, sf_dir):
+    """Training is one distributed word count plus one vocabulary
+    collect — never a job per merge round — and the returned vocabulary
+    reads the barriered word table instead of recounting the corpus."""
+    from ecommerce_lakehouse_spark.operators import bpe
+
+    bpe._train.cache_clear()
+    sc = spark.sparkContext
+    (merges, wf), jobs = _group_jobs(
+        sc, "test_bpe_train", lambda: bpe.bpe_train(spark, sf_dir, 31)
+    )
+    assert len(jobs) <= 3, jobs
+    # the training collect filled the barrier's blocks: reading the
+    # vocabulary is one job of one stage, with no shuffle-map stage (run
+    # as a separate job under AQE, or as a parent stage without it)
+    rows, jobs = _group_jobs(
+        sc, "test_bpe_vocab", wf.select("word", "freq", "seq").collect
+    )
+    assert [len(list(j.stageIds)) for j in jobs] == [1], jobs
+    assert rows
+    assert merges.count() == 31
+
+
+def test_bpe_cache_is_bounded_lru(spark, tmp_path):
+    """Training more distinct (sf_dir, steps) keys than the cache bound
+    keeps at most the bound, evicting the least recently used; a hit
+    returns the very same frames."""
+    from ecommerce_lakehouse_spark.operators import bpe
+
+    d = _write(
+        spark, tmp_path, "documents", [(1, "banana band", "en", "s0", 0)], DOC_SCHEMA
+    )
+    bpe._train.cache_clear()
+    n = bpe._train.cache_info().maxsize
+    trained = {steps: bpe.bpe_train(spark, d, steps) for steps in range(1, n + 2)}
+    assert bpe._train.cache_info().currsize == n
+    assert bpe.bpe_train(spark, d, 2) is trained[2]
+    # steps=1 was evicted first; retraining it evicts steps=3, since the
+    # hit above made steps=2 more recent
+    assert bpe.bpe_train(spark, d, 1) is not trained[1]
+    assert bpe.bpe_train(spark, d, 2) is trained[2]
+    assert bpe.bpe_train(spark, d, 3) is not trained[3]
+    assert bpe._train.cache_info().currsize == n
+
+
 def test_bpe_encode_stats_matches_python(spark, tmp_path):
     """Per-doc token accounting after the merge budget (exhausted early
     on this mini corpus) recomputed by a reference
